@@ -1817,20 +1817,23 @@ def stream_session_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState with an event-time timeout
     (cognee_spark/streaming/sessions.py — the push-based twin of the
     reference's read-time abandoned rule, session_lifecycle/metrics.py
-    get_effective_status_sql). The bounded call stream is drained through ONE
-    availableNow run: the real calls plus two far-future heartbeat files land
-    before the stream starts, so batch 0 folds every call (watermark 0 — no
-    row is ever late-dropped) and the trailing no-data batch fires every
-    session's event-time timeout once the watermark jumps past
-    last_activity + gap. Every session emits exactly once — its terminal
-    status once the watermark passes the 'purchase' end-event's ts, else
-    'abandoned' — and the output is deterministic, letting DuckDB replay the
-    full rollup including the event-time freeze rule (only calls with
-    ts <= the earliest terminal ts accrue). The fold itself is
-    batch-order-independent, so this emits row-for-row what the previous
-    three-run drain (one run per arrival wave) emitted, at a third of the
-    stream-startup + state-store-commit cost; multi-run incremental arrival
-    stays pinned by tests/test_streaming_sessions.py."""
+    get_effective_status_sql). The operator is keyed by a fixed hash bucket
+    of session_id, so each micro-batch makes one Python call per touched
+    bucket (at most N_BUCKETS) and folds all of that bucket's sessions at
+    once; each session keeps its own event-time deadline inside the bucket's
+    state. The bounded call stream is drained through ONE availableNow run:
+    the real calls plus two far-future heartbeat files land before the
+    stream starts, so batch 0 folds every call (watermark 0 — no row is ever
+    late-dropped) and the trailing no-data batch fires every session's
+    deadline once the watermark jumps past last_activity + gap. Every
+    session emits exactly once — its terminal status once the watermark
+    passes the 'purchase' end-event's ts, else 'abandoned' — and the output
+    is deterministic, letting DuckDB replay the full rollup including the
+    event-time freeze rule (only calls with ts <= the earliest terminal ts
+    accrue). The drain is loud: it raises unless it emitted exactly one
+    record per distinct session, so a skipped no-data timeout batch fails
+    instead of returning an empty frame. Multi-run incremental arrival stays
+    pinned by tests/test_streaming_sessions.py."""
     import datetime as _dt
     import os
     import shutil
@@ -1845,7 +1848,7 @@ def stream_session_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     calls = _stream_calls_df(spark, sf_dir)
-    max_ts = calls.agg(F.max("ts")).collect()[0][0]
+    max_ts, n_sessions = calls.agg(F.max("ts"), F.countDistinct("session_id")).collect()[0]
     root = tempfile.mkdtemp(prefix="cognee_stream_sess_")
     try:
         in_dir = os.path.join(root, "calls")
@@ -1899,7 +1902,16 @@ def stream_session_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "status",
             )
         )
-        return out.localCheckpoint(eager=True)
+        # the count materializes the checkpoint: one job, as eager=True was
+        out = out.localCheckpoint(eager=False)
+        emitted = out.count()
+        if emitted != n_sessions:
+            # every session must emit exactly once in this single drain; a
+            # skipped trailing no-data batch would leave the sessions unfired
+            raise RuntimeError(
+                f"session drain emitted {emitted} records for {n_sessions} sessions"
+            )
+        return out
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
         shutil.rmtree(root, ignore_errors=True)

@@ -5,10 +5,13 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cognee_spark.sources.corpus import build_repos_df
 from cognee_spark.streaming.incremental import incremental_cognify, windowed_event_counts
+
+pytestmark = pytest.mark.streaming
 
 N = 120
 

@@ -8,7 +8,11 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import time
 
+import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     StringType,
@@ -18,7 +22,16 @@ from pyspark.sql.types import (
 )
 
 from cognee_spark.operators.lifecycle import priced_calls
-from cognee_spark.streaming.sessions import stream_session_records
+from cognee_spark.streaming.sessions import (
+    _DTYPES,
+    _SESSION_FIELDS,
+    N_BUCKETS,
+    _accrue,
+    _fold,
+    stream_session_records,
+)
+
+pytestmark = pytest.mark.streaming
 
 T0 = dt.datetime(2026, 1, 1, 12, 0, 0)
 
@@ -35,8 +48,8 @@ INPUT_SCHEMA = StructType(
 )
 
 
-def _run(spark, input_dir, out_dir, ckpt):
-    stream = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)
+def _run(spark, input_dir, out_dir, ckpt, **source_options):
+    stream = spark.readStream.schema(INPUT_SCHEMA).options(**source_options).parquet(input_dir)
     records = stream_session_records(
         priced_calls(stream), gap_seconds=120, watermark="10 seconds"
     )
@@ -49,6 +62,7 @@ def _run(spark, input_dir, out_dir, ckpt):
         .start()
     )
     q.awaitTermination()
+    return q
 
 
 def _emit(spark, input_dir, rows):
@@ -61,55 +75,85 @@ def _sec(s):
     return T0 + dt.timedelta(seconds=s)
 
 
+def _empty_bucket():
+    return {f.name: np.array([], dtype=_DTYPES[type(f.dataType)]) for f in _SESSION_FIELDS}
+
+
 def test_tracker_fold_matches_reference():
-    """The numpy fold helpers reproduce the original pandas expressions
-    exactly — including null handling and dtype fallbacks — across the column
-    dtypes the serializer can deliver (int64, float64-with-NaN, object,
-    bool, object-bool-with-None)."""
-    import numpy as np
-    import pandas as pd
-
-    from cognee_spark.streaming.sessions import _cost_nanos, _int_sum, _true_count
-
+    """The batch fold's per-session call counters equal a plain pandas
+    groupby rollup — including null handling and dtype fallbacks — across the
+    column dtypes the serializer can deliver (int64, float64-with-NaN,
+    object, bool, object-bool-with-None)."""
     frames = [
         pd.DataFrame(
             {
-                "tokens": pd.array([5, 6, 7], dtype="int64"),
-                "cost": [0.1, 0.2, 0.30000000000000004],
-                "err": pd.array([True, False, True], dtype="bool"),
+                "tokens_in": pd.array([5, 6, 7, 8], dtype="int64"),
+                "cost_usd": [0.1, 0.2, 0.30000000000000004, 0.7],
+                "error": pd.array([True, False, True, True], dtype="bool"),
             }
         ),
         pd.DataFrame(
             {
-                "tokens": [5.0, float("nan"), 7.0],
-                "cost": [0.1, float("nan"), 1e-9 * 0.4],
-                "err": [True, None, False],
+                "tokens_in": [5.0, float("nan"), 7.0, 2.0],
+                "cost_usd": [0.1, float("nan"), 1e-9 * 0.4, 3.0],
+                "error": [True, None, False, True],
             }
         ),
         pd.DataFrame(
             {
-                "tokens": pd.Series([5, None, "7"], dtype=object),
-                "cost": pd.Series([0.15, None, 2.5], dtype=object),
-                "err": pd.Series([1, None, 0], dtype=object),
+                "tokens_in": pd.Series([5, None, "7", 9], dtype=object),
+                "cost_usd": pd.Series([0.15, None, 2.5, "1.25"], dtype=object),
+                "error": pd.Series([1, None, 0, "x"], dtype=object),
             }
         ),
     ]
+    groups = np.array([0, 2, 0, 2])  # group 1 never has a row
     masks = [
-        np.array([True, True, True]),
-        np.array([True, False, True]),
-        np.array([False, False, False]),
+        np.array([True, True, True, True]),
+        np.array([True, False, True, False]),
+        np.array([False, False, False, False]),
     ]
+
+    def rollup(series, mask):
+        summed = series.groupby(groups[mask]).sum().reindex(range(3), fill_value=0)
+        return [int(v) for v in summed]
+
     for rows in frames:
+        rows["tokens_out"] = rows["tokens_in"]
         for mask in masks:
-            assert _int_sum(rows["tokens"], mask) == int(
-                pd.to_numeric(rows["tokens"][mask]).fillna(0).sum()
-            )
-            assert _cost_nanos(rows["cost"], mask) == int(
-                (pd.to_numeric(rows["cost"][mask]).fillna(0.0) * 1e9).round().sum()
-            )
-            assert _true_count(rows["err"], mask) == int(
-                rows["err"][mask].fillna(False).astype(bool).sum()
-            )
+            sel = rows[mask]
+            got = _accrue(rows, mask, groups, 3)
+            assert list(got["n_calls"]) == rollup(pd.Series(1, index=sel.index), mask)
+            for col in ("tokens_in", "tokens_out"):
+                assert list(got[col]) == rollup(pd.to_numeric(sel[col]).fillna(0), mask)
+            nanos = (pd.to_numeric(sel["cost_usd"]).fillna(0.0) * 1e9).round()
+            assert list(got["cost_nanos"]) == rollup(nanos, mask)
+            errs = sel["error"].where(sel["error"].notna(), False).astype(bool)
+            assert list(got["error_count"]) == rollup(errs, mask)
+
+
+def test_fold_coerces_only_call_rows():
+    """A terminal row's unused numeric columns may hold anything: only the
+    rows that accrue are coerced, so a bad value there must still raise."""
+    rows = pd.DataFrame(
+        {
+            "session_id": ["s1", "s1"],
+            "user_id": ["alice", "alice"],
+            "ts": pd.to_datetime([_sec(0), _sec(10)]),
+            "tokens_in": pd.Series([5, "n/a"], dtype=object),
+            "tokens_out": [1, 0],
+            "cost_usd": [0.5, None],
+            "status": [None, "completed"],
+        }
+    )
+    bucket, touched = _fold(_empty_bucket(), rows)
+    assert list(touched) == [True]
+    assert list(bucket["n_calls"]) == [1] and list(bucket["tokens_in"]) == [5]
+    assert list(bucket["term_status"]) == ["completed"]
+
+    rows["status"] = [None, None]  # the bad value now sits on a call row
+    with pytest.raises(ValueError):
+        _fold(_empty_bucket(), rows)
 
 
 def test_stream_session_records(spark, tmp_path):
@@ -336,3 +380,77 @@ def test_terminal_freezes_stragglers(spark, tmp_path):
     assert rows[0].status == "failed"
     assert rows[0].n_calls == 1
     assert rows[0].tokens_in == 100
+
+
+def _bucket_mates(spark):
+    """Two session ids that share a state bucket, and one that does not."""
+    ids = spark.range(200).select(F.concat(F.lit("sess-"), F.col("id").cast("string")).alias("sid"))
+    buckets = {
+        r.sid: r.b
+        for r in ids.select("sid", F.pmod(F.xxhash64("sid"), F.lit(N_BUCKETS)).alias("b")).collect()
+    }
+    first, *rest = buckets
+    mate = next(s for s in rest if buckets[s] == buckets[first])
+    other = next(s for s in rest if buckets[s] != buckets[first])
+    return first, mate, other
+
+
+def test_expired_session_fires_in_its_bucket_mates_data_batch(spark, tmp_path):
+    """Sessions A and B share a bucket. In the micro-batch where the watermark
+    is already past A's deadline, B receives data: A must emit in that batch,
+    exactly once, through B's data call, and B's counts stay its own."""
+    input_dir = str(tmp_path / "calls")
+    out_dir = str(tmp_path / "records")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(input_dir, exist_ok=True)
+    a, b, hb = _bucket_mates(spark)
+
+    # one file per micro-batch, in write order: batch 0 opens A and B; batch
+    # 1 moves the watermark to 990s; batch 2 brings B data while A (deadline
+    # 120s) has expired — no no-data batch runs between them
+    for rows in (
+        [
+            (a, "alice", _sec(0), "gpt-4o", "x" * 400, "y" * 40, None),
+            (b, "bob", _sec(0), "gpt-4o", "x" * 40, "y" * 4, None),
+        ],
+        [(hb, "carol", _sec(1000), "o3", "x" * 4, None, None)],
+        [(b, "bob", _sec(995), "gpt-4o", "x" * 40, "y" * 4, None)],
+    ):
+        _emit(spark, input_dir, rows)
+        time.sleep(1.1)  # distinct file modification times fix the order
+    q = _run(spark, input_dir, out_dir, ckpt, maxFilesPerTrigger=1)
+    assert [p.numInputRows for p in q.recentProgress] == [2, 1, 1]
+    got = spark.read.parquet(out_dir).collect()
+    assert [(r.session_id, r.status, r.n_calls, r.tokens_in) for r in got] == [
+        (a, "abandoned", 1, 100)
+    ]
+
+    # a far heartbeat times B out; A must not emit again
+    _emit(spark, input_dir, [(hb + "-2", "carol", _sec(5000), "o3", "x" * 4, None, None)])
+    _run(spark, input_dir, out_dir, ckpt)
+    rows = spark.read.parquet(out_dir).where(F.col("session_id").isin(a, b)).collect()
+    assert sorted(r.session_id for r in rows) == sorted([a, b])
+    got = {r.session_id: r for r in rows}
+    assert got[b].status == "abandoned"
+    assert got[b].n_calls == 2 and got[b].tokens_in == 20 and got[b].tokens_out == 2
+    assert got[b].started_at == _sec(0) and got[b].last_activity_at == _sec(995)
+    assert got[a].last_activity_at == _sec(0)
+
+
+def test_state_rows_updated_bounded_by_buckets(spark, tmp_path):
+    """Each micro-batch rewrites at most one state row per bucket, however
+    many sessions it touches (a per-session key would rewrite 201 here)."""
+    input_dir = str(tmp_path / "calls")
+    out_dir = str(tmp_path / "records")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(input_dir, exist_ok=True)
+    rows = [(f"s{i}", "alice", _sec(i), "gpt-4o", "x" * 40, None, None) for i in range(200)]
+    _emit(spark, input_dir, rows + [("hb", "carol", _sec(3600), "o3", "x" * 4, None, None)])
+    q = _run(spark, input_dir, out_dir, ckpt)
+
+    updated = [p.stateOperators[0].numRowsUpdated for p in q.recentProgress]
+    assert len(updated) == 2  # the data batch, then the timeout batch
+    assert all(0 < n <= N_BUCKETS for n in updated)
+    out = spark.read.parquet(out_dir).collect()
+    assert len(out) == 200 == len({r.session_id for r in out})
+    assert {r.status for r in out} == {"abandoned"}
