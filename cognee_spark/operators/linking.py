@@ -36,13 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cognee_spark.functions.ids import normalize_identity_col
-from cognee_spark.functions.sha import (
-    SHA_BIN,
-    SHA_RAW,
-    sha_distinct,
-    sha_narrow,
-    sha_widen,
-)
+from cognee_spark.functions.narrow import SHA, sha_distinct
 from cognee_spark.functions.similarity import SIMILARITY_CUTOFF
 from cognee_spark.operators.components import connected_components
 
@@ -116,7 +110,7 @@ def resolve_code_edges(
 
     Output schema contract: alongside the public columns (repo, src, rel,
     dst, content_sha, ...) the frame carries the INTERNAL narrowed-sha pair
-    ``_sha_bin``/``_sha_raw`` (functions/sha.py) so code_triples can consume
+    ``_sha_bin``/``_sha_raw`` (functions/narrow.py) so code_triples can consume
     the digest without a hex round trip; consumers persisting or
     ``select('*')``-ing this frame should drop the pair, and input frames
     must not already carry columns of those reserved names (they would be
@@ -124,23 +118,23 @@ def resolve_code_edges(
     """
     code_m = mentions.where(F.col("mode") == "code")
     # the provenance sha rides the probe side of every resolution join as a
-    # 32-byte digest instead of 64-char hex (functions/sha.py — guarded, so
+    # 32-byte digest instead of 64-char hex (functions/narrow.py — guarded, so
     # non-sha fixture values pass through bit-identical). The branch selects
     # expose BOTH the widened string (the public content_sha schema) and the
     # narrow pair: code_triples consumes the pair directly and column pruning
     # removes the unevaluated widen, so the composed pipeline pays no
     # hex round trip; a consumer reading content_sha prunes the pair instead.
-    _sha_bin, _sha_raw = sha_narrow(F.col("content_sha"))
+    _sha_bin, _sha_raw = SHA.narrow(F.col("content_sha"))
     code_e = (
         raw_edges.where(F.col("mode") == "code")
-        .withColumn(SHA_BIN, _sha_bin)
-        .withColumn(SHA_RAW, _sha_raw)
+        .withColumn(SHA.bin, _sha_bin)
+        .withColumn(SHA.raw, _sha_raw)
         .drop("content_sha")
     )
     _sha_cols = (
-        sha_widen(F.col(SHA_BIN), F.col(SHA_RAW)).alias("content_sha"),
-        F.col(SHA_BIN),
-        F.col(SHA_RAW),
+        SHA.widen(F.col(SHA.bin), F.col(SHA.raw)).alias("content_sha"),
+        F.col(SHA.bin),
+        F.col(SHA.raw),
     )
 
     def salt_probe(df: DataFrame) -> DataFrame:
@@ -274,17 +268,17 @@ def code_triples(resolved: DataFrame) -> DataFrame:
     # the dedup exchange moves the whole triple set — sha rides it narrowed;
     # resolve_code_edges already carries the narrow pair, so reuse it (the
     # widen it also exposes is pruned away) instead of re-unhexing per row
-    if SHA_BIN in resolved.columns:
-        sha_bin, sha_raw = F.col(SHA_BIN), F.col(SHA_RAW)
+    if SHA.bin in resolved.columns:
+        sha_bin, sha_raw = F.col(SHA.bin), F.col(SHA.raw)
     else:
-        sha_bin, sha_raw = sha_narrow(F.col("content_sha"))
+        sha_bin, sha_raw = SHA.narrow(F.col("content_sha"))
     return sha_distinct(
         resolved.select(
             normalize_identity_col(F.concat_ws(":", "repo", "src")).alias("subj"),
             normalize_identity_col(F.col("rel")).alias("pred"),
             qualify_obj.alias("obj"),
             "repo", "path", "lang",
-            sha_bin.alias(SHA_BIN), sha_raw.alias(SHA_RAW),
+            sha_bin.alias(SHA.bin), sha_raw.alias(SHA.raw),
         )
     )
 
@@ -502,7 +496,7 @@ def nl_triples(raw_edges: DataFrame, mapping: DataFrame) -> DataFrame:
     """NL raw edges + broadcast alias map → canonical (subj, pred, obj)."""
     edges = raw_edges.where(F.col("mode") == "nl")
     m = F.broadcast(mapping)
-    sha_bin, sha_raw = sha_narrow(F.col("content_sha"))
+    sha_bin, sha_raw = SHA.narrow(F.col("content_sha"))
     return sha_distinct(
         edges.join(m.withColumnRenamed("name", "src").withColumnRenamed("canonical", "subj"), "src")
         .join(m.withColumnRenamed("name", "dst").withColumnRenamed("canonical", "obj"), "dst")
@@ -511,6 +505,6 @@ def nl_triples(raw_edges: DataFrame, mapping: DataFrame) -> DataFrame:
             normalize_identity_col(F.col("rel")).alias("pred"),
             "obj",
             "repo", "path", "lang",
-            sha_bin.alias(SHA_BIN), sha_raw.alias(SHA_RAW),
+            sha_bin.alias(SHA.bin), sha_raw.alias(SHA.raw),
         )
     )

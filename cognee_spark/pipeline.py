@@ -11,19 +11,15 @@ provenance stamping), and a killed run resumes from the last committed stage.
 
 Stage order and write ordering (nodes before edges) follow SURVEY §7.1/O9.
 
-Scheduling: the stage DAG is wider than a chain — summarization is
-independent of extraction (the reference runs them as parallel tasks over the
-same chunks, extract_graph_and_summarize.py:12-37), triples and mentions both
-depend only on aliases+extractions, and the five graph leaf tables depend
-only on nodes/triples/mentions. Summarization (small, chunk-scoped) still
-overlaps the spine from its own thread, but the HEAVY stages run one at a
-time: co-scheduling two shuffle-heavy jobs lets their tasks evict each
-other's cache/allocator working sets — event-log attribution at 3.2M files
-measured the overlapped triples∥mentions pair at 1.79x the CPU and 2x the
-wall of the same stages run back-to-back (BENCH/attrib_4exec_3200000*.txt),
-and sequential leaf writes were measured faster the same way in round 4.
-A saturated executor gains nothing from a second concurrent job; an idle
-one is better fed by AQE-sized partitions of the one running stage.
+Scheduling: stages commit one at a time, in the order below, with one
+exception: summarization overlaps the spine from a single worker thread, the
+reference's one parallel pair (extract_graph_and_summarize.py:12-37); run
+inline it measured 8% slower end to end (kgbench cognify_build, 4-core VM).
+Heavy stages never overlap each other: co-scheduled shuffle-heavy jobs evict
+each other's working sets (triples∥mentions measured 1.79x the CPU and 2x the
+wall of back-to-back at 3.2M files, BENCH/attrib_4exec_3200000*.txt).
+entity_types and edge_type_histogram are derived frames over the committed
+nodes/triples rather than commits: they are cheap and never resume alone.
 
 Run via spark-submit:
     spark-submit --py-files cognee_spark.zip -m cognee_spark.pipeline ...
@@ -34,7 +30,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -203,8 +198,13 @@ def run_pipeline(
 
     chunks = stage("chunks", build_chunks, partition_by=["lang"])
 
-    pool = ThreadPoolExecutor(max_workers=6)
-    try:
+    from cognee_spark.registry import NL_EXTRACTORS, resolve
+
+    extract_nl_stage = resolve(NL_EXTRACTORS, nl_extractor)
+
+    # leaving the block waits for summaries, so no stage commits after
+    # run_pipeline has returned or raised
+    with ThreadPoolExecutor(max_workers=1) as pool:
         # E4/E5 summarization runs CONCURRENTLY with the extract→link→
         # materialize spine (the reference's extract_graph_and_summarize
         # parallel task pair, extract_graph_and_summarize.py:12-37).
@@ -219,10 +219,6 @@ def run_pipeline(
         # E1/E6/E8 extraction — one tall table, parsed once. The code and NL
         # branches are independent inputs of one union write job, so Spark
         # already runs their stages concurrently inside that job.
-        from cognee_spark.registry import NL_EXTRACTORS, resolve
-
-        extract_nl_stage = resolve(NL_EXTRACTORS, nl_extractor)
-
         def build_extractions() -> DataFrame:
             code = extract_from_files(documents)
             nl = extract_nl_stage(chunks.where(~F.col("lang").isin(*CODE_LANGS)))
@@ -280,99 +276,37 @@ def run_pipeline(
             )
             return _stamp(code_m.unionByName(nl_m), "canonicalize")
 
-        # triples and mentions share only `aliases`, so they COULD overlap —
-        # but two concurrent shuffle-heavy jobs thrash each other's working
-        # sets: event-log attribution at 3.2M files / 4 executors measured
-        # the overlapped pair at 1,310 CPU core-s vs 733 run back-to-back
-        # (1.79x), combined wall 209s vs 105s (BENCH/attrib_4exec_*.txt).
-        # Sequential is also never slower at low parallelism (2 cores have
-        # no idle slots for a second job to fill), so it is the default;
-        # COGNEE_SPINE_OVERLAP=1 restores the overlap to reproduce the A/B.
-        if os.environ.get("COGNEE_SPINE_OVERLAP") == "1":
-            triples_future = pool.submit(
-                stage, "triples", build_triples, partition_by=["pred"]
-            )
-            mentions_future = pool.submit(
-                stage, "mentions", build_canonical_mentions, partition_by=["mode"]
-            )
-            canonical_mentions = mentions_future.result()
-            triples = triples_future.result()
-        else:
-            triples = stage("triples", build_triples, partition_by=["pred"])
-            canonical_mentions = stage(
-                "mentions", build_canonical_mentions, partition_by=["mode"]
-            )
+        triples = stage("triples", build_triples, partition_by=["pred"])
+        canonical_mentions = stage(
+            "mentions", build_canonical_mentions, partition_by=["mode"]
+        )
 
-        # K1-K4 materialize: nodes BEFORE edges (O9 write ordering). The
-        # spine through nodes runs ALONE: co-scheduling leaf writes against
-        # it steals its cores under FIFO (measured: +6s on triples, +25s on
-        # nodes at local[4]) — leaves are all terminal, so they run together
-        # at the end where stealing cannot lengthen the critical path.
+        # K1-K4 materialize: nodes BEFORE edges (O9 write ordering)
         mention_kinds = (
             canonical_mentions.groupBy(F.col("canonical_name").alias("name"))
             .agg(F.min("kind").alias("kind"))
         )
-
         nodes = stage("nodes", lambda: _stamp(build_nodes(triples, mention_kinds), "nodes"))
-
-        entity_types = stage(
-            "entity_types",
-            lambda: _stamp(build_entity_types(nodes), "entity_types"),
+        edges = stage(
+            "edges",
+            # content + is_a + the exists_in/mentioned_in structural families
+            # (retrieve_existing_edges.py) in one edge table
+            lambda: _stamp(
+                build_edges(triples, nodes).unionByName(
+                    build_structural_edges(canonical_mentions)
+                ),
+                "edges",
+            ),
             count_rows=False,
         )
-
-        # terminal leaf tables run SEQUENTIALLY, largest first: each is a
-        # wide allocation-heavy write that saturates the cluster alone, and
-        # running them concurrently inflates their combined task CPU
-        # (event-log measured at 3.2M files / local[16]: edges 468→1158
-        # core-s, contains 420→703 when co-scheduled — GC/allocator
-        # contention, zero spill). Sequential leaves are faster at every
-        # measured size ≥800k files. nodes is already durable, preserving
-        # the nodes-before-edges write ordering.
-        leaves = {
-            "edges": stage(
-                "edges",
-                # content + is_a + the exists_in/mentioned_in structural
-                # families (retrieve_existing_edges.py) in one edge table
-                lambda: _stamp(
-                    build_edges(triples, nodes).unionByName(
-                        build_structural_edges(canonical_mentions)
-                    ),
-                    "edges",
-                ),
-                count_rows=False,
-            ),
-            "contains_edges": stage(
-                "contains_edges",
-                lambda: _stamp(build_contains_edges(canonical_mentions), "contains"),
-                count_rows=False,
-            ),
-            "edge_type_histogram": stage(
-                "edge_type_histogram",
-                lambda: _stamp(edge_type_histogram(triples), "edge_types"),
-                count_rows=False,
-            ),
-        }
+        contains_edges = stage(
+            "contains_edges",
+            lambda: _stamp(build_contains_edges(canonical_mentions), "contains"),
+            count_rows=False,
+        )
         summaries = summaries_future.result() if summaries_future else None
-        if with_index:
-            # index stage (index_data_points.py:10-68): per-(type,field)
-            # embedding collections over the committed graph tables
-            leaves["embeddings"] = stage(
-                "embeddings",
-                lambda: _stamp(
-                    build_index(nodes, entity_types, triples, summaries=summaries),
-                    "index",
-                ),
-                partition_by=["collection"],
-                count_rows=False,
-            )
-    finally:
-        pool.shutdown(wait=False)
 
-    metrics: dict = {"wall_sec": round(time.time() - t0, 3), "stages": store.checkpoints()}
-    if compute_metrics:
-        metrics["graph"] = graph_metrics(triples)
-
+    entity_types = _stamp(build_entity_types(nodes), "entity_types")
     tables = {
         "documents": documents,
         "chunks": chunks,
@@ -382,10 +316,29 @@ def run_pipeline(
         "mentions": canonical_mentions,
         "nodes": nodes,
         "entity_types": entity_types,
-        **leaves,
+        "edges": edges,
+        "contains_edges": contains_edges,
+        "edge_type_histogram": _stamp(edge_type_histogram(triples), "edge_types"),
     }
     if summaries is not None:
         tables["summaries"] = summaries
+    if with_index:
+        # index stage (index_data_points.py:10-68): per-(type,field)
+        # embedding collections over the committed graph tables
+        tables["embeddings"] = stage(
+            "embeddings",
+            lambda: _stamp(
+                build_index(nodes, entity_types, triples, summaries=summaries),
+                "index",
+            ),
+            partition_by=["collection"],
+            count_rows=False,
+        )
+
+    metrics: dict = {"wall_sec": round(time.time() - t0, 3), "stages": store.checkpoints()}
+    if compute_metrics:
+        metrics["graph"] = graph_metrics(triples)
+
     return {"tables": tables, "metrics": metrics}
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import uuid
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -91,6 +92,7 @@ def test_uuid5_col_is_codegen_friendly(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+@pytest.mark.spine
 def test_uuid_narrow_widen_round_trip(spark):
     """narrow→widen is the IDENTITY for every input — canonical uuids convert
     to 16-byte binary, everything else (paths, uppercase, dash-misplaced or
@@ -101,7 +103,7 @@ def test_uuid_narrow_widen_round_trip(spark):
 
     from pyspark.sql import functions as F
 
-    from cognee_spark.functions.uuids import UUID_BIN, UUID_RAW, uuid_narrow, uuid_widen
+    from cognee_spark.functions.narrow import UUID
 
     vals = [
         str(_uuid.uuid5(_uuid.NAMESPACE_OID, "x")),
@@ -113,12 +115,13 @@ def test_uuid_narrow_widen_round_trip(spark):
         "g0000000-0000-0000-0000-000000000000",  # non-hex char
         "00000000-00000000-0000-0000-00000000",  # dash misplaced, 36 chars
         "",
+        str(_uuid.uuid5(_uuid.NAMESPACE_OID, "y")) + "\n",  # guard's $ admits it
     ]
     df = spark.createDataFrame([(v,) for v in vals], ["v"])
-    b, r = uuid_narrow(F.col("v"))
+    b, r = UUID.narrow(F.col("v"))
     out = df.select(
-        "v", b.alias(UUID_BIN), r.alias(UUID_RAW),
-    ).withColumn("back", uuid_widen(F.col(UUID_BIN), F.col(UUID_RAW)))
+        "v", b.alias(UUID.bin), r.alias(UUID.raw),
+    ).withColumn("back", UUID.widen(F.col(UUID.bin), F.col(UUID.raw)))
     rows = out.collect()
     for row in rows:
         assert row.back == row.v, (row.v, row.back)

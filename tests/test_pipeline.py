@@ -13,10 +13,19 @@ from pyspark.sql import functions as F
 
 from cognee_spark.pipeline import run_pipeline
 from cognee_spark.sources.corpus import build_repos_df
-from cognee_spark.sources.golden import golden_triples
+from cognee_spark.sources.golden import golden_edge_type_histogram, golden_triples
 from cognee_spark.store import TableStore
 
+pytestmark = pytest.mark.spine
+
 N = 210
+
+# every stage run_pipeline commits (entity_types and edge_type_histogram are
+# derived frames over committed tables, not commits)
+COMMITTED = {
+    "documents", "chunks", "summaries", "extractions", "entity_aliases",
+    "triples", "mentions", "nodes", "edges", "contains_edges", "embeddings",
+}
 
 
 @pytest.fixture(scope="module")
@@ -63,6 +72,37 @@ def test_no_duplicate_ids(result):
     assert edges.count() == edges.select("edge_object_id").distinct().count()
 
 
+def test_ledger_holds_exactly_the_committed_stages(result):
+    stages = {c["stage"]: c for c in result["metrics"]["stages"]}
+    assert set(stages) == COMMITTED
+    # O9 write ordering: nodes commit before edges
+    assert stages["nodes"]["ts"] < stages["edges"]["ts"]
+
+
+def test_derived_edge_type_histogram_matches_oracle(result):
+    got = [
+        (r.relationship_name, r.number_of_edges)
+        for r in result["tables"]["edge_type_histogram"].collect()
+    ]
+    assert got == golden_edge_type_histogram(N)
+
+
+def test_raise_waits_for_summaries_commit(spark, tmp_path):
+    """A spine failure leaves run_pipeline only after the overlapped
+    summaries stage has committed — nothing commits after it raised."""
+
+    def failing_extractor(chunks):
+        raise RuntimeError("extractor failed")
+
+    root = str(tmp_path / "kg")
+    with pytest.raises(RuntimeError, match="extractor failed"):
+        run_pipeline(
+            spark, build_repos_df(spark, N), root, f"fail:{N}",
+            compute_metrics=False, with_index=False, nl_extractor=failing_extractor,
+        )
+    assert "summaries" in {c["stage"] for c in TableStore(root).checkpoints()}
+
+
 def test_resume_skips_committed_stages(result, spark):
     root = result["root"]
     store = TableStore(root)
@@ -78,8 +118,8 @@ def test_invalidate_and_rebuild_identical(result, spark):
     store = TableStore(root)
     baseline = _triple_set(result["tables"]["triples"])
     # simulate a kill after extraction commit: downstream stages lost
-    for stage in ("entity_aliases", "triples", "mentions", "nodes", "entity_types",
-                  "edges", "contains_edges", "edge_type_histogram"):
+    for stage in ("entity_aliases", "triples", "mentions", "nodes", "edges",
+                  "contains_edges"):
         store.invalidate(stage)
     repos = build_repos_df(spark, N)
     out = run_pipeline(spark, repos, root, f"synthetic:{N}", compute_metrics=False)
@@ -128,32 +168,3 @@ def test_salted_resolution_joins_identical_output(spark, tmp_path):
     assert _triple_set(plain["tables"]["triples"]) == _triple_set(
         salted["tables"]["triples"]
     )
-
-
-def test_spine_overlap_knob_identical_output(spark, tmp_path, monkeypatch):
-    """COGNEE_SPINE_OVERLAP=1 restores the concurrent triples/mentions
-    submission (the pre-round-6 scheduling, kept to reproduce the A/B in
-    BENCH/attrib_4exec_3200000*.txt); outputs are bit-identical to the
-    sequential default on every shared table."""
-    repos = build_repos_df(spark, N)
-    monkeypatch.delenv("COGNEE_SPINE_OVERLAP", raising=False)
-    serial = run_pipeline(
-        spark, repos, str(tmp_path / "serial"), f"sp:{N}",
-        compute_metrics=False, with_summaries=False, with_index=False,
-    )
-    monkeypatch.setenv("COGNEE_SPINE_OVERLAP", "1")
-    overlap = run_pipeline(
-        spark, repos, str(tmp_path / "overlap"), f"sp:{N}",
-        compute_metrics=False, with_summaries=False, with_index=False,
-    )
-    assert _triple_set(serial["tables"]["triples"]) == _triple_set(
-        overlap["tables"]["triples"]
-    )
-    for name in ("mentions", "nodes", "edges"):
-        a = serial["tables"][name]
-        b = overlap["tables"][name]
-        cols = sorted(a.columns)
-        assert sorted(b.columns) == cols, name
-        sym_diff = a.select(*cols).exceptAll(b.select(*cols)).count() + \
-            b.select(*cols).exceptAll(a.select(*cols)).count()
-        assert sym_diff == 0, name

@@ -1,4 +1,4 @@
-"""Shuffle-narrowed sha lineage (functions/sha.py) — exactness pins.
+"""Shuffle-narrowed sha lineage (functions/narrow.py) — exactness pins.
 
 The narrow/widen pair must be bit-identical for every input class the engine
 and its test fixtures produce: real sha2 hex digests, short fixture strings
@@ -11,9 +11,12 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
-from cognee_spark.functions.sha import SHA_BIN, SHA_RAW, sha_min, sha_narrow, sha_widen
+from cognee_spark.functions.narrow import SHA, sha_distinct, sha_min
+
+pytestmark = pytest.mark.spine
 
 
 def _real(s: str) -> str:
@@ -30,18 +33,19 @@ VALUES = [
     "x" * 64,  # 64 chars, not hex -> must ride the overflow column
     _real("c")[:63],  # 63-char hex prefix -> not converted
     _real("c") + "0",  # 65 chars -> not converted
+    _real("d") + "\n",  # the guard's `$` admits it; unhex must not convert it
     None,
 ]
 
 
 def _roundtrip(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "content_sha string")
-    b, r = sha_narrow(F.col("content_sha"))
+    b, r = SHA.narrow(F.col("content_sha"))
     out = df.select(
         "content_sha",
-        sha_widen(b, r).alias("back"),
-        b.alias(SHA_BIN),
-        r.alias(SHA_RAW),
+        SHA.widen(b, r).alias("back"),
+        b.alias(SHA.bin),
+        r.alias(SHA.raw),
     )
     return out.collect()
 
@@ -51,16 +55,16 @@ def test_roundtrip_is_identity_for_every_class(spark):
         assert row.back == row.content_sha
         # exactly one of (bin, raw) is set per non-null input
         if row.content_sha is not None:
-            assert (row[SHA_BIN] is None) != (row[SHA_RAW] is None)
+            assert (row[SHA.bin] is None) != (row[SHA.raw] is None)
         else:
-            assert row[SHA_BIN] is None and row[SHA_RAW] is None
+            assert row[SHA.bin] is None and row[SHA.raw] is None
 
 
 def test_contract_shas_actually_narrow(spark):
     rows = {r.content_sha: r for r in _roundtrip(spark, [_real("a"), "sha1"])}
-    assert rows[_real("a")][SHA_BIN] is not None  # 32-byte digest path
-    assert len(rows[_real("a")][SHA_BIN]) == 32
-    assert rows["sha1"][SHA_BIN] is None  # overflow string path
+    assert rows[_real("a")][SHA.bin] is not None  # 32-byte digest path
+    assert len(rows[_real("a")][SHA.bin]) == 32
+    assert rows["sha1"][SHA.bin] is None  # overflow string path
 
 
 def test_uppercase_hex_rides_overflow_byte_exact(spark):
@@ -70,7 +74,7 @@ def test_uppercase_hex_rides_overflow_byte_exact(spark):
     up = _real("a").upper()
     (row,) = _roundtrip(spark, [up])
     assert row.back == up
-    assert row[SHA_BIN] is None and row[SHA_RAW] == up
+    assert row[SHA.bin] is None and row[SHA.raw] == up
 
 
 def test_min_agg_matches_python_min_across_classes(spark):
@@ -84,13 +88,13 @@ def test_min_agg_matches_python_min_across_classes(spark):
     }
     data = [(g, v) for g, vs in groups.items() for v in vs]
     df = spark.createDataFrame(data, "g string, content_sha string")
-    b, r = sha_narrow(F.col("content_sha"))
+    b, r = SHA.narrow(F.col("content_sha"))
     got = {
         row.g: row.m
-        for row in df.select("g", b.alias(SHA_BIN), r.alias(SHA_RAW))
+        for row in df.select("g", b.alias(SHA.bin), r.alias(SHA.raw))
         .groupBy("g")
-        .agg(F.min(SHA_BIN).alias(SHA_BIN), F.min(SHA_RAW).alias(SHA_RAW))
-        .select("g", sha_min(F.col(SHA_BIN), F.col(SHA_RAW)).alias("m"))
+        .agg(F.min(SHA.bin).alias(SHA.bin), F.min(SHA.raw).alias(SHA.raw))
+        .select("g", sha_min(F.col(SHA.bin), F.col(SHA.raw)).alias("m"))
         .collect()
     }
     for g, vs in groups.items():
@@ -99,17 +103,15 @@ def test_min_agg_matches_python_min_across_classes(spark):
 
 
 def test_sha_distinct_dedups_and_restores_schema(spark):
-    from cognee_spark.functions.sha import sha_distinct
-
     vals = [
         ("a", _real("x")), ("a", _real("x")),   # duplicate hex pair
         ("b", "sha1"), ("b", "sha1"),           # duplicate overflow pair
         ("c", None),
     ]
     df = spark.createDataFrame(vals, "g string, content_sha string")
-    b, r = sha_narrow(F.col("content_sha"))
-    out = sha_distinct(df.select("g", b.alias(SHA_BIN), r.alias(SHA_RAW)))
-    # SHA pair replaced by content_sha at SHA_BIN's position, SHA_RAW gone
+    b, r = SHA.narrow(F.col("content_sha"))
+    out = sha_distinct(df.select("g", b.alias(SHA.bin), r.alias(SHA.raw)))
+    # SHA pair replaced by content_sha at SHA.bin's position, SHA.raw gone
     assert out.columns == ["g", "content_sha"]
     got = {(row.g, row.content_sha) for row in out.collect()}
     assert got == {("a", _real("x")), ("b", "sha1"), ("c", None)}
